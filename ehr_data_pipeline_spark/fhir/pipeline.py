@@ -85,15 +85,23 @@ def bronze_coalesce_target(
     return max(parallelism, -(-input_bytes // bytes_per_file))
 
 
+_LONG_MAX = 2**63 - 1  # Spark's "size unknown" statistic
+
+
 def _input_size_bytes(df: DataFrame) -> int:
     """Total size of a scan-rooted frame's input, from the optimizer's
     statistics (for file sources: the sum of file sizes, already known
-    to the reader — no job runs). Falls back to 0 (→ parallelism floor)
-    if the internal accessor drifts."""
+    to the reader — no job runs). Assumes a FILE-SCAN-rooted frame:
+    other roots (e.g. an RDD) report Spark's unknown-size sentinel,
+    ``Long.MaxValue``, which would size the bronze land at ~3.6e10
+    files. Any size at or above the sentinel counts as unknown, and
+    unknown — like a drifted internal accessor — falls back to 0
+    (→ parallelism floor)."""
     try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:  # pragma: no cover - accessor drift only
         return 0
+    return 0 if size >= _LONG_MAX else size
 
 
 def run_pipeline(

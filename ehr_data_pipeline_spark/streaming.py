@@ -22,6 +22,14 @@ Design:
   microbatch never has to shuffle the whole history at once;
   checkpointing makes restarts exactly-once (the memory-sink test path
   uses an ephemeral checkpoint).
+- **One drain that fails loudly.** Every bounded run goes through
+  :func:`drain`: it starts a configured writer with an ``availableNow``
+  trigger and waits. A drain that does not finish within ``timeout_sec``
+  is stopped and raises ``TimeoutError``, so no caller ever reads
+  half-applied maintained state and no query is left active; a failed
+  batch re-raises its error from the wait. Per-batch progress (input
+  rows, durations, state-operator rows) is on the returned query's
+  ``recentProgress``.
 
 The events schema is read from the parquet footer once on the driver
 (streaming file sources require an explicit schema) and the same
@@ -32,9 +40,11 @@ so batch and stream see byte-identical rows.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ehr_data_pipeline_spark.tables import NANOS_TS_COLS, _normalize_event_time
 
@@ -325,7 +335,9 @@ def parquet_batch_sink(path: str):
     duplicates. Idempotent replay + source tracking = exactly-once
     end-to-end. Readers get the union via a plain recursive parquet read
     with ``batch_id`` as a partition column; compact with
-    ``sinks.compact_parquet`` once a day when batch dirs accumulate."""
+    ``sinks.compact_parquet`` once a day when batch dirs accumulate.
+    Run it, like every foreachBatch sink here, with :func:`drain` and a
+    real checkpoint."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(f"{path}/batch_id={batch_id}")
@@ -333,23 +345,25 @@ def parquet_batch_sink(path: str):
     return write
 
 
-def run_to_parquet(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    timeout_sec: int = 300,
-) -> StreamingQuery:
-    """Drain the stream's current input into an idempotent per-batch
-    parquet layout (:func:`parquet_batch_sink`) with an ``availableNow``
-    trigger and a REAL checkpoint — restartable: a second run over the
-    same checkpoint processes only files that arrived since."""
-    query = (
-        df.writeStream.foreachBatch(parquet_batch_sink(path))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(timeout_sec)
+def drain(writer: DataStreamWriter, timeout_sec: int = 300) -> StreamingQuery:
+    """Run a configured stream writer (sink plus ``checkpointLocation``,
+    e.g. ``df.writeStream.foreachBatch(sink).option("checkpointLocation",
+    ck)``) over the input available now, and return the TERMINATED query.
+    With a real checkpoint the drain is restartable: a later drain over
+    the same checkpoint processes only input that arrived since.
+
+    Fails loudly: a query still running after ``timeout_sec`` is stopped
+    and ``TimeoutError`` is raised, so the caller never reads
+    half-applied state and no query is left active; a failed batch
+    re-raises its error from the wait. Per-batch progress is on the
+    returned query's ``recentProgress``."""
+    query = writer.trigger(availableNow=True).start()
+    if not query.awaitTermination(timeout_sec):
+        query.stop()
+        raise TimeoutError(
+            f"streaming query {query.id} did not finish within "
+            f"{timeout_sec} s; it was stopped"
+        )
     return query
 
 
@@ -359,19 +373,14 @@ def run_to_memory(
     output_mode: str = "append",
     timeout_sec: int = 300,
 ) -> StreamingQuery:
-    """Drain the stream's current input with an ``availableNow`` trigger
-    into an in-memory table ``name`` (test/demo sink): processes all
-    available files in rate-limited microbatches, then stops. Query the
-    result with ``spark.sql(f"SELECT * FROM {name}")``."""
-    query = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+    """Drain the stream's current input into an in-memory table ``name``
+    (test/demo sink): processes all available files in rate-limited
+    microbatches, then stops. Query the result with
+    ``spark.sql(f"SELECT * FROM {name}")``."""
+    return drain(
+        df.writeStream.format("memory").queryName(name).outputMode(output_mode),
+        timeout_sec,
     )
-    query.awaitTermination(timeout_sec)
-    return query
 
 
 def scd2_dimension_sink(
@@ -461,7 +470,42 @@ def _state_epochs(dim_path: str, complete_only: bool = False) -> "list[int]":
     ]
 
 
-_scd2_epochs = _state_epochs  # historical name, used by tests
+def _union_epochs(
+    spark: SparkSession, path: str, epochs: "list[int]"
+) -> DataFrame:
+    """The union of the given epoch directories under ``path``."""
+    return reduce(
+        lambda a, b: a.unionByName(b),
+        [spark.read.parquet(f"{path}/epoch={e}") for e in epochs],
+    )
+
+
+def _read_prior_epochs(
+    spark: SparkSession, path: str, batch_id: int,
+    empty: "Callable[[], DataFrame]",
+) -> DataFrame:
+    """A delta-epoch sink's read of its maintained index at batch entry:
+    first resume any pending compaction (ADVICE r10 — see
+    :func:`_resume_pending_compaction`), then the union of every epoch
+    strictly below ``batch_id``, or ``empty()`` when there is none. A
+    replayed batch therefore reads the same predecessors and overwrites
+    only its own directory."""
+    _resume_pending_compaction(spark, path)
+    prev = sorted(e for e in _state_epochs(path) if e < batch_id)
+    return _union_epochs(spark, path, prev) if prev else empty()
+
+
+def _auto_compact(
+    spark: SparkSession, path: str, auto_compact_every: "int | None"
+) -> None:
+    """The in-sink compaction policy: :func:`compact_epochs` (which keeps
+    the newest epoch a pure delta, so replay stays safe) once at least
+    ``auto_compact_every`` complete epochs exist; ``None`` disables it."""
+    if (
+        auto_compact_every is not None
+        and len(_state_epochs(path, complete_only=True)) >= auto_compact_every
+    ):
+        compact_epochs(spark, path)
 
 
 def read_epoch_state(spark: SparkSession, state_path: str) -> DataFrame:
@@ -491,19 +535,15 @@ def run_scd2_maintenance(
     tiebreak: str | None = None,
     timeout_sec: int = 300,
 ) -> StreamingQuery:
-    """Drain the stream's available input into the SCD2 dimension with an
-    ``availableNow`` trigger and a real checkpoint — restartable: a later
-    run over the same checkpoint merges only newly arrived files."""
-    query = (
+    """:func:`drain` the stream's available input into the SCD2 dimension
+    — restartable: a later run over the same checkpoint merges only newly
+    arrived files."""
+    return drain(
         events.writeStream.foreachBatch(
             scd2_dimension_sink(dim_path, keys, attrs, ts_col, tiebreak)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ).option("checkpointLocation", checkpoint),
+        timeout_sec,
     )
-    query.awaitTermination(timeout_sec)
-    return query
 
 
 def rollup_maintenance_sink(
@@ -621,29 +661,6 @@ def hist_maintenance_sink(
     )
 
 
-def run_hll_maintenance(
-    events: DataFrame,
-    state_path: str,
-    checkpoint: str,
-    col: str,
-    group_cols: "tuple[str, ...]" = (),
-    timeout_sec: int = 300,
-) -> StreamingQuery:
-    """Drain the stream's available input into the maintained HLL
-    registers with an ``availableNow`` trigger and a real checkpoint —
-    restartable, order-free (cell-wise max commutes)."""
-    query = (
-        events.writeStream.foreachBatch(
-            hll_maintenance_sink(state_path, col, group_cols)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(timeout_sec)
-    return query
-
-
 def read_rollup(spark: SparkSession, rollup_path: str) -> DataFrame:
     """The finalized continuous aggregate (derived sum/avg from the
     maintained mergeable partials)."""
@@ -662,18 +679,14 @@ def run_rollup_maintenance(
     value_col: str = "value",
     timeout_sec: int = 300,
 ) -> StreamingQuery:
-    """Drain the stream's available input into the maintained rollup with
-    an ``availableNow`` trigger and a real checkpoint — restartable."""
-    query = (
+    """:func:`drain` the stream's available input into the maintained
+    rollup — restartable."""
+    return drain(
         events.writeStream.foreachBatch(
             rollup_maintenance_sink(rollup_path, bucket, keys, ts_col, value_col)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ).option("checkpointLocation", checkpoint),
+        timeout_sec,
     )
-    query.awaitTermination(timeout_sec)
-    return query
 
 
 def near_dedup_maintenance_sink(
@@ -731,20 +744,13 @@ def near_dedup_maintenance_sink(
     )
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        from functools import reduce
-
         spark = batch_df.sparkSession
-        _resume_pending_compaction(spark, index_path)
-        prev = sorted(e for e in _state_epochs(index_path) if e < batch_id)
-        if prev:
-            index = reduce(
-                lambda a, b: a.unionByName(b),
-                [spark.read.parquet(f"{index_path}/epoch={e}") for e in prev],
-            )
-        else:
-            index = build_minhash_index(
+        index = _read_prior_epochs(
+            spark, index_path, batch_id,
+            lambda: build_minhash_index(
                 batch_df.limit(0), id_col, text_col, k, num_hashes
-            )
+            ),
+        )
         try:
             # the operator's new-entries frame is discarded (ADVICE r11,
             # low — found on the curation sink, same lineage here): it
@@ -770,12 +776,7 @@ def near_dedup_maintenance_sink(
             ).write.mode("overwrite").parquet(
                 f"{index_path}/epoch={batch_id}"
             )
-            if (
-                auto_compact_every is not None
-                and len(_state_epochs(index_path, complete_only=True))
-                >= auto_compact_every
-            ):
-                compact_epochs(spark, index_path)
+            _auto_compact(spark, index_path, auto_compact_every)
         finally:
             release_builder_caches()
 
@@ -888,7 +889,6 @@ def compact_epochs(
     through the same epoch (:func:`compact_bm25_index`)."""
     import json
     import os
-    from functools import reduce
 
     tmp = os.path.join(state_path, "_compact_tmp")
     manifest_path = os.path.join(tmp, "_compact_manifest.json")
@@ -907,11 +907,7 @@ def compact_epochs(
         return 0
     target = max(complete)
     # phase A: materialize the union outside the epoch=* namespace
-    merged = reduce(
-        lambda a, b: a.unionByName(b),
-        [spark.read.parquet(f"{state_path}/epoch={e}") for e in complete],
-    )
-    merged.write.mode("overwrite").parquet(tmp)
+    _union_epochs(spark, state_path, complete).write.mode("overwrite").parquet(tmp)
     # atomic manifest (write-then-rename): a crash mid-write must never
     # leave a torn manifest under the final name — the resume path
     # would otherwise fail to parse it at every subsequent sink batch
@@ -980,15 +976,10 @@ def read_near_dedup_fresh(spark: SparkSession, fresh_path: str) -> DataFrame:
     of every COMPLETE fresh epoch (each epoch holds one microbatch's
     survivors — disjoint by construction, so the union is the deduped
     corpus in arrival order)."""
-    from functools import reduce
-
     epochs = _state_epochs(fresh_path, complete_only=True)
     if not epochs:
         raise FileNotFoundError(f"no complete epochs under {fresh_path}")
-    parts = [
-        spark.read.parquet(f"{fresh_path}/epoch={e}") for e in sorted(epochs)
-    ]
-    return reduce(lambda a, b: a.unionByName(b), parts)
+    return _union_epochs(spark, fresh_path, sorted(epochs))
 
 
 def run_near_dedup_maintenance(
@@ -1002,23 +993,18 @@ def run_near_dedup_maintenance(
     timeout_sec: int = 300,
     auto_compact_every: "int | None" = None,
 ) -> StreamingQuery:
-    """Drain the stream's available input through continuous near-dup
-    dedup with an ``availableNow`` trigger and a real checkpoint —
-    restartable: a later run over the same checkpoint dedups only newly
-    arrived files against the accumulated index."""
-    query = (
+    """:func:`drain` the stream's available input through continuous
+    near-dup dedup — restartable: a later run over the same checkpoint
+    dedups only newly arrived files against the accumulated index."""
+    return drain(
         docs.writeStream.foreachBatch(
             near_dedup_maintenance_sink(
                 index_path, fresh_path, id_col, text_col, threshold,
                 auto_compact_every=auto_compact_every,
             )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ).option("checkpointLocation", checkpoint),
+        timeout_sec,
     )
-    query.awaitTermination(timeout_sec)
-    return query
 
 
 def paragraph_dedup_maintenance_sink(
@@ -1062,18 +1048,11 @@ def paragraph_dedup_maintenance_sink(
     )
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        from functools import reduce
-
         spark = batch_df.sparkSession
-        _resume_pending_compaction(spark, index_path)
-        prev = sorted(e for e in _state_epochs(index_path) if e < batch_id)
-        if prev:
-            index = reduce(
-                lambda a, b: a.unionByName(b),
-                [spark.read.parquet(f"{index_path}/epoch={e}") for e in prev],
-            )
-        else:
-            index = build_paragraph_index(batch_df.limit(0), text_col, sep)
+        index = _read_prior_epochs(
+            spark, index_path, batch_id,
+            lambda: build_paragraph_index(batch_df.limit(0), text_col, sep),
+        )
         cleaned, _new_entries = paragraph_dedup_against_index(
             batch_df, index, text_col, id_col, sep
         )
@@ -1096,44 +1075,9 @@ def paragraph_dedup_maintenance_sink(
             text_col,
             sep,
         ).write.mode("overwrite").parquet(f"{index_path}/epoch={batch_id}")
-        if (
-            auto_compact_every is not None
-            and len(_state_epochs(index_path, complete_only=True))
-            >= auto_compact_every
-        ):
-            compact_epochs(spark, index_path)
+        _auto_compact(spark, index_path, auto_compact_every)
 
     return write
-
-
-def run_paragraph_dedup_maintenance(
-    docs: DataFrame,
-    index_path: str,
-    clean_path: str,
-    checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n\n",
-    timeout_sec: int = 300,
-    auto_compact_every: "int | None" = None,
-) -> StreamingQuery:
-    """Drain the stream's available input through continuous paragraph
-    dedup with an ``availableNow`` trigger and a real checkpoint —
-    restartable: a later run over the same checkpoint cleans only newly
-    arrived files against the accumulated paragraph index."""
-    query = (
-        docs.writeStream.foreachBatch(
-            paragraph_dedup_maintenance_sink(
-                index_path, clean_path, id_col, text_col, sep,
-                auto_compact_every,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(timeout_sec)
-    return query
 
 
 def curation_maintenance_sink(
@@ -1177,8 +1121,8 @@ def curation_maintenance_sink(
     Exactly-once by the same idempotent-epoch argument as each
     single-stage sink: a batch reads BOTH indexes strictly below its own
     id and overwrites its own three epoch directories, so a replayed
-    batch recomputes from identical predecessors; batch entry resumes
-    any pending compaction on both index paths (ADVICE r10), and
+    batch recomputes from identical predecessors; each index read first
+    resumes any pending compaction on that index (ADVICE r10), and
     ``auto_compact_every`` applies the proven paragraph-sink policy to
     both. At 100 TB the expensive lineage runs ONCE per microbatch: two
     narrow cleaning passes, one content-keyed window + fingerprint
@@ -1186,7 +1130,8 @@ def curation_maintenance_sink(
     BOTH index deltas rebuild from already-materialized data (the
     paragraph delta from the persisted survivors, the minhash delta
     from the landed fresh parquet — ADVICE r11), so no write action
-    re-runs the candidate join and no stage rescans history."""
+    re-runs the candidate join and no stage rescans history. Read the
+    admitted corpus back with :func:`read_near_dedup_fresh`."""
     from ehr_data_pipeline_spark.operators.cleaning import (
         build_paragraph_index,
         c4_blocklist_filter,
@@ -1200,21 +1145,7 @@ def curation_maintenance_sink(
     )
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        from functools import reduce
-
         spark = batch_df.sparkSession
-        for p in (para_index_path, minhash_index_path):
-            _resume_pending_compaction(spark, p)
-
-        def read_index(path: str, empty: DataFrame) -> DataFrame:
-            prev = sorted(e for e in _state_epochs(path) if e < batch_id)
-            if not prev:
-                return empty
-            return reduce(
-                lambda a, b: a.unionByName(b),
-                [spark.read.parquet(f"{path}/epoch={e}") for e in prev],
-            )
-
         # stages 1+2: stateless page cleaning (one narrow pass)
         page = batch_df.select(id_col, text_col)
         if blocklist:
@@ -1224,8 +1155,9 @@ def curation_maintenance_sink(
         ).select(id_col, F.col("clean_text").alias(text_col))
 
         # stage 3: paragraph dedup against the maintained index
-        para_index = read_index(
-            para_index_path, build_paragraph_index(lined.limit(0), text_col, sep)
+        para_index = _read_prior_epochs(
+            spark, para_index_path, batch_id,
+            lambda: build_paragraph_index(lined.limit(0), text_col, sep),
         )
         # the operator's new-entries frame is deliberately discarded:
         # the index delta is rebuilt below from the persisted survivors
@@ -1239,9 +1171,9 @@ def curation_maintenance_sink(
         kept = kept.persist()  # feeds stage 4 AND the paragraph delta
         try:
             # stage 4: near-dup dedup against the maintained MinHash index
-            mh_index = read_index(
-                minhash_index_path,
-                build_minhash_index(kept.limit(0), id_col, text_col),
+            mh_index = _read_prior_epochs(
+                spark, minhash_index_path, batch_id,
+                lambda: build_minhash_index(kept.limit(0), id_col, text_col),
             )
             # the operator's new-entries frame is deliberately discarded
             # too (ADVICE r11, low): it shares the band-join lineage with
@@ -1272,53 +1204,13 @@ def curation_maintenance_sink(
             build_minhash_index(fresh_landed, id_col, text_col).write.mode(
                 "overwrite"
             ).parquet(f"{minhash_index_path}/epoch={batch_id}")
-            if auto_compact_every is not None:
-                for p in (para_index_path, minhash_index_path):
-                    if (len(_state_epochs(p, complete_only=True))
-                            >= auto_compact_every):
-                        compact_epochs(spark, p)
+            for p in (para_index_path, minhash_index_path):
+                _auto_compact(spark, p, auto_compact_every)
         finally:
             kept.unpersist()
             release_builder_caches()
 
     return write
-
-
-def run_curation_maintenance(
-    docs: DataFrame,
-    para_index_path: str,
-    minhash_index_path: str,
-    clean_path: str,
-    checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    blocklist: "tuple[str, ...]" = (),
-    sep: str = "\n",
-    threshold: float = 0.6,
-    timeout_sec: int = 300,
-    auto_compact_every: "int | None" = None,
-) -> StreamingQuery:
-    """Drain the stream's available input through the composed curation
-    funnel (blocklist → C4 line rules → paragraph dedup → near-dup) with
-    an ``availableNow`` trigger and a real checkpoint — restartable: a
-    later run over the same checkpoint curates only newly arrived files
-    against both accumulated indexes. Read the admitted corpus back with
-    :func:`read_near_dedup_fresh` (same epoch layout)."""
-    query = (
-        docs.writeStream.foreachBatch(
-            curation_maintenance_sink(
-                para_index_path, minhash_index_path, clean_path,
-                id_col, text_col, blocklist,
-                sep=sep, threshold=threshold,
-                auto_compact_every=auto_compact_every,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(timeout_sec)
-    return query
 
 
 def semantic_dedup_maintenance_sink(
@@ -1363,7 +1255,8 @@ def semantic_dedup_maintenance_sink(
     state — compact with :func:`compact_epochs`, never by deleting
     deltas — or set ``auto_compact_every=K`` (replay-safe: the newest
     epoch stays a pure delta, see the near-dedup sink). Batch entry
-    resumes any pending compaction first (ADVICE r10)."""
+    resumes any pending compaction first (ADVICE r10). Read the admitted
+    corpus back with :func:`read_near_dedup_fresh`."""
     from ehr_data_pipeline_spark.operators.similarity import (
         semantic_dedup_against_index,
     )
@@ -1372,18 +1265,11 @@ def semantic_dedup_maintenance_sink(
     )
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        from functools import reduce
-
         spark = batch_df.sparkSession
-        _resume_pending_compaction(spark, index_path)
-        prev = sorted(e for e in _state_epochs(index_path) if e < batch_id)
-        if prev:
-            index = reduce(
-                lambda a, b: a.unionByName(b),
-                [spark.read.parquet(f"{index_path}/epoch={e}") for e in prev],
-            )
-        else:
-            index = batch_df.select(id_col, vec_col).limit(0)
+        index = _read_prior_epochs(
+            spark, index_path, batch_id,
+            lambda: batch_df.select(id_col, vec_col).limit(0),
+        )
         try:
             fresh, new_entries = semantic_dedup_against_index(
                 batch_df, index, centroids, threshold, id_col, vec_col, dim
@@ -1394,50 +1280,11 @@ def semantic_dedup_maintenance_sink(
             new_entries.write.mode("overwrite").parquet(
                 f"{index_path}/epoch={batch_id}"
             )
-            if (
-                auto_compact_every is not None
-                and len(_state_epochs(index_path, complete_only=True))
-                >= auto_compact_every
-            ):
-                compact_epochs(spark, index_path)
+            _auto_compact(spark, index_path, auto_compact_every)
         finally:
             release_builder_caches()
 
     return write
-
-
-def run_semantic_dedup_maintenance(
-    vectors: DataFrame,
-    index_path: str,
-    fresh_path: str,
-    checkpoint: str,
-    centroids: "list[tuple[int, list[float]]]",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.4,
-    dim: "int | None" = None,
-    timeout_sec: int = 300,
-    auto_compact_every: "int | None" = None,
-) -> StreamingQuery:
-    """Drain the stream's available input through continuous semantic
-    dedup with an ``availableNow`` trigger and a real checkpoint —
-    restartable: a later run over the same checkpoint dedups only newly
-    arrived files against the accumulated index. Read the admitted
-    corpus back with :func:`read_near_dedup_fresh` (the epoch layout is
-    shared)."""
-    query = (
-        vectors.writeStream.foreachBatch(
-            semantic_dedup_maintenance_sink(
-                index_path, fresh_path, centroids, id_col, vec_col,
-                threshold, dim, auto_compact_every,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(timeout_sec)
-    return query
 
 
 def run_ivf_index_stream(
@@ -1477,16 +1324,13 @@ def run_ivf_index_stream(
         _centroid_dists(vec_col, centroids)[0]["cid"].alias("cid"),
         F.col(vec_col),
     )
-    query = (
+    return drain(
         assigned.writeStream.format("parquet")
         .option("path", index_path)
         .option("checkpointLocation", checkpoint)
-        .partitionBy("cid")
-        .trigger(availableNow=True)
-        .start()
+        .partitionBy("cid"),
+        timeout_sec,
     )
-    query.awaitTermination(timeout_sec)
-    return query
 
 
 def bm25_index_maintenance_sink(
@@ -1576,8 +1420,6 @@ def read_bm25_index(
     the tell (unequal minimum complete epochs; both tables see every
     batch id, so equal compaction implies equal floors) and raise with
     the remedy rather than serve skewed scores."""
-    from functools import reduce
-
     per_table = {
         path: _state_epochs(path, complete_only=True)
         for path in (postings_path, lengths_path)
@@ -1599,37 +1441,7 @@ def read_bm25_index(
             "lengths_path) (its entry heal finishes the pair) or any "
             "maintenance sink batch before reading."
         )
-    out = []
-    for path in (postings_path, lengths_path):
-        parts = [spark.read.parquet(f"{path}/epoch={e}") for e in epochs]
-        out.append(reduce(lambda a, b: a.unionByName(b), parts))
-    return out[0], out[1]
-
-
-def run_bm25_index_maintenance(
-    docs: DataFrame,
-    postings_path: str,
-    lengths_path: str,
-    checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    timeout_sec: int = 300,
-    auto_compact_every: "int | None" = None,
-) -> StreamingQuery:
-    """Drain the stream's available input into the maintained BM25
-    index with an ``availableNow`` trigger and a real checkpoint —
-    restartable: a later run over the same checkpoint indexes only
-    newly arrived files."""
-    query = (
-        docs.writeStream.foreachBatch(
-            bm25_index_maintenance_sink(
-                postings_path, lengths_path, id_col, text_col,
-                auto_compact_every,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return (
+        _union_epochs(spark, postings_path, epochs),
+        _union_epochs(spark, lengths_path, epochs),
     )
-    query.awaitTermination(timeout_sec)
-    return query

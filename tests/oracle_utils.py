@@ -71,8 +71,14 @@ def _canon_column(s: pd.Series) -> list:
         # the multiset compare, verdict-identical to naive-datetime
         # objects (both sides map through the same injection). Columns
         # with NaT keep the object path so the NaT != NaT quirk is
-        # preserved; tz-aware or out-of-ns-range values fall back too.
-        if getattr(dt, "tz", None) is None and not s.isna().any():
+        # preserved; tz-aware values fall back too, and so do values
+        # outside the ns range, which the numpy cast would wrap silently.
+        if (
+            getattr(dt, "tz", None) is None
+            and not s.isna().any()
+            and pd.Timestamp.min <= s.min()
+            and s.max() <= pd.Timestamp.max
+        ):
             try:
                 return [
                     ("__dt__", v)  # tagged: a BIGINT column of epoch
@@ -162,13 +168,17 @@ def compare_spark_vs_oracle(spark_df, con, sql: str, name: str = "?") -> None:
     # fast path: multiset equality (same verdict as the sorted zip-wise
     # compare, without the stringify-keyed sort); the detailed sorted
     # diff runs only when something actually differs — or when a cell is
-    # unhashable (e.g. a map-typed column), where only the slow path works
+    # unhashable (e.g. a map-typed column), where only the slow path works.
+    # The slow path decides: the fast path's typed canon can disagree on
+    # equal frames (a datetime64 column vs an object column of datetimes)
     try:
         if _canon_multiset(spdf) == _canon_multiset(ddf):
             return
     except TypeError:
         pass
     srows, drows = canon_rows(spdf), canon_rows(ddf)
+    if srows == drows:
+        return
     n_bad = sum(1 for a, b in zip(srows, drows) if a != b)
     examples = [(a, b) for a, b in zip(srows, drows) if a != b][:3]
     raise AssertionError(f"{name}: {n_bad}/{len(srows)} rows differ; first: {examples}")

@@ -191,3 +191,24 @@ def test_bronze_coalesce_target():
     import pytest as _pytest
     with _pytest.raises(ValueError):
         bronze_coalesce_target(-1, 8)
+
+
+def test_input_size_bytes_rejects_unknown_size_sentinel(spark, tmp_path):
+    """An RDD-rooted frame reports Spark's unknown-size sentinel
+    (Long.MaxValue) as its size; it must read as 0 so the bronze target
+    falls back to the parallelism floor, while a file scan reports its
+    real bytes."""
+    from ehr_data_pipeline_spark.fhir.pipeline import (
+        _input_size_bytes,
+        bronze_coalesce_target,
+    )
+
+    rdd_rooted = spark.sparkContext.parallelize([(1, "a"), (2, "b")]).toDF(
+        ["k", "v"]
+    )
+    assert _input_size_bytes(rdd_rooted) == 0
+    assert bronze_coalesce_target(_input_size_bytes(rdd_rooted), 8) == 8
+
+    path = str(tmp_path / "scan")
+    rdd_rooted.write.parquet(path)
+    assert 0 < _input_size_bytes(spark.read.parquet(path)) < 2**63 - 1

@@ -428,7 +428,11 @@ def test_canon_multiset_verdicts_match_slow_path():
     the driver's typed hashing catches)."""
     import pandas as pd
 
-    from tests.oracle_utils import compare_spark_vs_oracle, _canon_multiset
+    from tests.oracle_utils import (
+        _canon_column,
+        _canon_multiset,
+        compare_spark_vs_oracle,
+    )
 
     a = pd.DataFrame({
         "i": [1, 2, 3],
@@ -455,6 +459,35 @@ def test_canon_multiset_verdicts_match_slow_path():
     # NaN compares equal to NaN (canonicalized to None), like the old path
     g = a.iloc[[1, 0, 2]].reset_index(drop=True)
     assert _canon_multiset(a) == _canon_multiset(g)
+
+    # the slow path decides when the fast path disagrees: a datetime64
+    # column (DuckDB) equals an object column of the same datetimes
+    # (Spark) ...
+    import datetime as _dt
+
+    import duckdb
+    import pytest as _pytest
+
+    con = duckdb.connect()
+    sql = ("SELECT * FROM (VALUES (1, TIMESTAMP '2024-01-01 00:00:00'), "
+           "(2, TIMESTAMP '2200-06-15 12:30:00')) t(k, ts)")
+    obj = pd.DataFrame({
+        "k": pd.Series([2, 1], dtype="int32"),
+        "ts": pd.Series([_dt.datetime(2200, 6, 15, 12, 30),
+                         _dt.datetime(2024, 1, 1)], dtype=object),
+    })
+    assert _canon_multiset(obj) != _canon_multiset(con.execute(sql).df())
+    compare_spark_vs_oracle(obj, con, sql, name="dt64-vs-object")
+    # ... but one changed cell still fails
+    bad = obj.copy()
+    bad.loc[0, "ts"] = _dt.datetime(2200, 6, 15, 12, 31)
+    with _pytest.raises(AssertionError, match="1/2 rows differ"):
+        compare_spark_vs_oracle(bad, con, sql, name="dt64-vs-object-bad")
+    con.close()
+    # datetimes beyond the ns range take the object path instead of
+    # wrapping silently in the int64-nanos cast
+    far = pd.Series([_dt.datetime(2300, 1, 1)]).astype("datetime64[us]")
+    assert _canon_column(far) == [_dt.datetime(2300, 1, 1)]
 
 
 def test_compare_spark_vs_oracle_accepts_pandas(spark):

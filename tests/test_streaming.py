@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from ehr_data_pipeline_spark.queries import REGISTRY
 from ehr_data_pipeline_spark.streaming import (
+    drain,
     hourly_event_counts,
     read_events_stream,
     run_to_memory,
@@ -17,6 +18,18 @@ from ehr_data_pipeline_spark.streaming import (
 from ehr_data_pipeline_spark.tables import load_table
 
 SF = "/root/testdata/sf0.001"
+
+
+@pytest.fixture(autouse=True)
+def no_query_left_running(spark):
+    """Every test must leave no streaming query active. A stray query is
+    stopped before the assertion fails, so one failure cannot cascade
+    into the tests after it."""
+    yield
+    stray = spark.streams.active
+    for q in stray:
+        q.stop()
+    assert not stray, f"streaming queries left running: {[q.id for q in stray]}"
 
 
 @pytest.fixture(scope="module")
@@ -320,7 +333,7 @@ def test_parquet_batch_sink_exactly_once_and_replay_idempotent(
     simulated REPLAY of a batch id (the failure window of any
     foreachBatch sink) leaves the table unchanged — overwrite, not
     append."""
-    from ehr_data_pipeline_spark.streaming import parquet_batch_sink, run_to_parquet
+    from ehr_data_pipeline_spark.streaming import parquet_batch_sink
 
     spark = checkpointed
     events = load_table(spark, SF, "events").filter(F.col("user_id") < 10)
@@ -334,7 +347,11 @@ def test_parquet_batch_sink_exactly_once_and_replay_idempotent(
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/*/*.parquet")
     )
-    run_to_parquet(stream, out, ckpt)
+    q = drain(
+        stream.writeStream.foreachBatch(parquet_batch_sink(out))
+        .option("checkpointLocation", ckpt)
+    )
+    assert not q.isActive and len(q.recentProgress) >= 2
 
     import glob
 
@@ -352,7 +369,10 @@ def test_parquet_batch_sink_exactly_once_and_replay_idempotent(
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/*/*.parquet")
     )
-    run_to_parquet(stream2, out, ckpt)
+    drain(
+        stream2.writeStream.foreachBatch(parquet_batch_sink(out))
+        .option("checkpointLocation", ckpt)
+    )
     assert spark.read.parquet(out).drop("batch_id").count() == events.count()
 
     # simulate a replayed microbatch: rerun batch 0's write with the same
@@ -362,6 +382,45 @@ def test_parquet_batch_sink_exactly_once_and_replay_idempotent(
     first_batch = spark.createDataFrame(src_batch.collect(), src_batch.schema)
     parquet_batch_sink(out)(first_batch, 0)
     assert spark.read.parquet(out).drop("batch_id").count() == events.count()
+
+
+def _one_file_stream(spark, tmp_path):
+    src = tmp_path / "drain_src"
+    spark.range(4).write.parquet(str(src / "f0"))
+    return spark.readStream.schema("id long").parquet(f"{src}/*/*.parquet")
+
+
+def test_drain_timeout_stops_query_and_raises(spark, tmp_path):
+    """A drain whose batch outlives ``timeout_sec`` must stop the query
+    and raise TimeoutError — never hand back a still-running query over
+    half-applied state."""
+    import time
+
+    def slow_sink(batch_df, batch_id):
+        time.sleep(4)
+
+    writer = _one_file_stream(spark, tmp_path).writeStream.foreachBatch(
+        slow_sink
+    ).option("checkpointLocation", str(tmp_path / "slow_ckpt"))
+    with pytest.raises(TimeoutError, match="within 1 s"):
+        drain(writer, timeout_sec=1)
+    assert spark.streams.active == []
+
+
+def test_drain_reraises_batch_failure(spark, tmp_path):
+    """A failing batch surfaces as an exception from drain, and the
+    failed query is no longer active."""
+    from pyspark.errors import StreamingQueryException
+
+    def failing_sink(batch_df, batch_id):
+        raise RuntimeError("sink exploded")
+
+    writer = _one_file_stream(spark, tmp_path).writeStream.foreachBatch(
+        failing_sink
+    ).option("checkpointLocation", str(tmp_path / "fail_ckpt"))
+    with pytest.raises(StreamingQueryException, match="sink exploded"):
+        drain(writer)
+    assert spark.streams.active == []
 
 
 def test_scd2_stream_maintenance_matches_full_rebuild(checkpointed, tmp_path):
@@ -425,9 +484,9 @@ def test_scd2_stream_maintenance_matches_full_rebuild(checkpointed, tmp_path):
     assert final == canon(full)
 
     # replay of the highest batch id recomputes from the same predecessor
-    from ehr_data_pipeline_spark.streaming import _scd2_epochs
+    from ehr_data_pipeline_spark.streaming import _state_epochs
 
-    last = max(_scd2_epochs(dim_path))
+    last = max(_state_epochs(dim_path))
     sink = scd2_dimension_sink(dim_path, keys, attrs, tiebreak="event_id")
     sink(events.filter(F.col("ts") >= c2), last)
     assert canon(read_scd2_dimension(spark, dim_path)) == final
@@ -479,9 +538,9 @@ def test_hll_stream_maintenance_matches_one_shot(checkpointed, tmp_path):
     epoch sink."""
     from ehr_data_pipeline_spark.operators.sketches import hll_build
     from ehr_data_pipeline_spark.streaming import (
+        hll_maintenance_sink,
         read_epoch_state,
         read_hll_estimate,
-        run_hll_maintenance,
     )
 
     spark = checkpointed
@@ -498,7 +557,11 @@ def test_hll_stream_maintenance_matches_one_shot(checkpointed, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/*/*.parquet")
     )
-    run_hll_maintenance(stream, state, ckpt, "user_id", ("event_type",))
+    drain(
+        stream.writeStream.foreachBatch(
+            hll_maintenance_sink(state, "user_id", ("event_type",))
+        ).option("checkpointLocation", ckpt)
+    )
 
     def canon(df):
         return sorted(tuple(r) for r in df.collect())
@@ -550,13 +613,10 @@ def test_cm_and_hist_stream_maintenance_match_one_shot(checkpointed, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{src}/*/*.parquet")
         )
-        q = (
+        drain(
             stream.writeStream.foreachBatch(sink)
             .option("checkpointLocation", str(tmp_path / f"{label}_ckpt"))
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(300)
         state_path = str(tmp_path / f"{label}_state")
         assert canon(read_epoch_state(spark, state_path)) == canon(one_shot), label
 
@@ -783,7 +843,6 @@ def test_semantic_dedup_stream_maintenance_matches_sequential_batches(
     from ehr_data_pipeline_spark.streaming import (
         _state_epochs,
         read_near_dedup_fresh,
-        run_semantic_dedup_maintenance,
         semantic_dedup_maintenance_sink,
     )
 
@@ -813,9 +872,16 @@ def test_semantic_dedup_stream_maintenance_matches_sequential_batches(
             .parquet(f"{src}/*/*.parquet")
         )
 
-    run_semantic_dedup_maintenance(
-        stream(), index_path, fresh_path, ckpt, cents, dim=64
-    )
+    def run_semantic():
+        drain(
+            stream().writeStream.foreachBatch(
+                semantic_dedup_maintenance_sink(
+                    index_path, fresh_path, cents, dim=64
+                )
+            ).option("checkpointLocation", ckpt)
+        )
+
+    run_semantic()
 
     def batch_sequential(batches):
         index = emb.limit(0)
@@ -833,9 +899,7 @@ def test_semantic_dedup_stream_maintenance_matches_sequential_batches(
     assert got == expect
 
     late.coalesce(1).write.parquet(str(src / "f2"))
-    run_semantic_dedup_maintenance(
-        stream(), index_path, fresh_path, ckpt, cents, dim=64
-    )
+    run_semantic()
     expect_full = batch_sequential(slices + [late])
     got_full = {
         r["vec_id"] for r in read_near_dedup_fresh(spark, fresh_path).collect()
@@ -917,7 +981,6 @@ def test_bm25_index_stream_matches_batch(checkpointed, tmp_path):
         _state_epochs,
         bm25_index_maintenance_sink,
         read_bm25_index,
-        run_bm25_index_maintenance,
     )
 
     spark = checkpointed
@@ -940,7 +1003,14 @@ def test_bm25_index_stream_matches_batch(checkpointed, tmp_path):
             .parquet(f"{src}/*/*.parquet")
         )
 
-    run_bm25_index_maintenance(stream(), pp, lp, ckpt)
+    def run_bm25():
+        drain(
+            stream().writeStream.foreachBatch(
+                bm25_index_maintenance_sink(pp, lp)
+            ).option("checkpointLocation", ckpt)
+        )
+
+    run_bm25()
     terms = ["hash", "join", "stream"]
 
     def scores_of(p, l):
@@ -952,7 +1022,7 @@ def test_bm25_index_stream_matches_batch(checkpointed, tmp_path):
 
     # late drop + restart over the same checkpoint
     late.coalesce(1).write.parquet(str(src / "f2"))
-    run_bm25_index_maintenance(stream(), pp, lp, ckpt)
+    run_bm25()
     p, l = read_bm25_index(spark, pp, lp)
     fp, fl = bm25_index_build(docs)
     want_full = scores_of(fp, fl)
@@ -995,7 +1065,6 @@ def test_paragraph_dedup_stream_matches_sequential_batches(
     from ehr_data_pipeline_spark.streaming import (
         _state_epochs,
         paragraph_dedup_maintenance_sink,
-        run_paragraph_dedup_maintenance,
     )
     from functools import reduce
 
@@ -1040,13 +1109,20 @@ def test_paragraph_dedup_stream_matches_sequential_batches(
             index = index.unionByName(new_entries)
         return rows
 
-    run_paragraph_dedup_maintenance(stream(), index_path, clean_path, ckpt)
+    def run_paragraph():
+        drain(
+            stream().writeStream.foreachBatch(
+                paragraph_dedup_maintenance_sink(index_path, clean_path)
+            ).option("checkpointLocation", ckpt)
+        )
+
+    run_paragraph()
     got = {r["doc_id"]: r.asDict() for r in read_clean().collect()}
     assert got == batch_sequential(slices)
 
     # late drop + restart over the same checkpoint
     late.coalesce(1).write.parquet(str(src / "f2"))
-    run_paragraph_dedup_maintenance(stream(), index_path, clean_path, ckpt)
+    run_paragraph()
     want_full = batch_sequential(slices + [late])
     got_full = {r["doc_id"]: r.asDict() for r in read_clean().collect()}
     assert got_full == want_full
@@ -1065,7 +1141,7 @@ def test_paragraph_dedup_auto_compaction_equivalent(checkpointed, tmp_path):
     from ehr_data_pipeline_spark.queries import _para_lined_docs
     from ehr_data_pipeline_spark.streaming import (
         _state_epochs,
-        run_paragraph_dedup_maintenance,
+        paragraph_dedup_maintenance_sink,
     )
     from functools import reduce
 
@@ -1089,9 +1165,12 @@ def test_paragraph_dedup_auto_compaction_equivalent(checkpointed, tmp_path):
             .parquet(f"{src}/*/*.parquet")
         )
         ip, cp = str(tmp_path / f"idx_{tag}"), str(tmp_path / f"cln_{tag}")
-        run_paragraph_dedup_maintenance(
-            stream, ip, cp, str(tmp_path / f"ck_{tag}"),
-            auto_compact_every=auto,
+        drain(
+            stream.writeStream.foreachBatch(
+                paragraph_dedup_maintenance_sink(
+                    ip, cp, auto_compact_every=auto
+                )
+            ).option("checkpointLocation", str(tmp_path / f"ck_{tag}"))
         )
         parts = [
             spark.read.parquet(f"{cp}/epoch={e}")
@@ -1343,7 +1422,6 @@ def test_curation_stream_matches_sequential_stage_composition(
         _state_epochs,
         curation_maintenance_sink,
         read_near_dedup_fresh,
-        run_curation_maintenance,
     )
 
     spark = checkpointed
@@ -1399,9 +1477,16 @@ def test_curation_stream_matches_sequential_stage_composition(
             mh_index = mh_index.unionByName(mh_entries)
         return admitted
 
-    run_curation_maintenance(
-        stream(), pip_, mip, cp, ckpt, blocklist=BLOCK, sep=SEP
-    )
+    def run_curation():
+        drain(
+            stream().writeStream.foreachBatch(
+                curation_maintenance_sink(
+                    pip_, mip, cp, blocklist=BLOCK, sep=SEP
+                )
+            ).option("checkpointLocation", ckpt)
+        )
+
+    run_curation()
     got = {
         r["doc_id"]: r["text"]
         for r in read_near_dedup_fresh(spark, cp).collect()
@@ -1412,9 +1497,7 @@ def test_curation_stream_matches_sequential_stage_composition(
 
     # late drop + restart over the same checkpoint
     late.coalesce(1).write.parquet(str(src / "f2"))
-    run_curation_maintenance(
-        stream(), pip_, mip, cp, ckpt, blocklist=BLOCK, sep=SEP
-    )
+    run_curation()
     want_full = batch_sequential(slices + [late])
     got_full = {
         r["doc_id"]: r["text"]
