@@ -17,7 +17,10 @@ writes it. Consequences at 100 TB:
   along as ``observe()`` metrics on the write action instead of forcing
   extra ``count()`` scans;
 - the quality report is the only deliberately separate action — the
-  reference also runs its checks as a distinct task (``:516-529``).
+  reference also runs its checks as a distinct task (``:516-529``). On
+  the sink path it runs while the single-parse cache is still live,
+  right after the writes, and comes back materialised; without a sink
+  it stays lazy.
 """
 
 from __future__ import annotations
@@ -38,7 +41,11 @@ from ehr_data_pipeline_spark.sinks import write_entity_tables
 class PipelineResult:
     """What the DAG hands back: the cleaned plans, where the sink wrote
     each table, the observed post-clean row counts, and the quality
-    report (lazy; collect to render).
+    report. On the sink path (``output_dir`` set) the report is
+    materialised before the cache is released: its rows (one per check)
+    sit in a local checkpoint that no longer references the extraction
+    plan, so collecting it re-plans and re-reads nothing.
+    Without a sink it stays lazy; collect it to render.
 
     ``source`` is the persisted exploded-entry frame (pruned to the
     consumed-field union) when the direct single-parse path was taken
@@ -119,7 +126,9 @@ def run_pipeline(
     nothing has executed; the returned plans are still runnable).
     ``quality=True`` attaches the pre-clean quality report over the
     extracted tables, mirroring the reference's check-before-clean order
-    (json_pipeline.py:1100-1109).
+    (json_pipeline.py:1100-1109). With a sink the report is forced after
+    the writes, over the same single parse, and returned materialised;
+    with ``output_dir=None`` it is returned lazy.
 
     ``stage_dir`` lands the exploded entries as a bronze parquet layer
     first and routes from that: the multiLine JSON parse (the expensive
@@ -241,12 +250,19 @@ def run_pipeline(
         result.row_counts = {
             rt: observations[rt].get["n_rows"] for rt in cleaned
         }
+        # force the report over the still-live shared cache so the job
+        # parses its input once; the local checkpoint holds only the
+        # report's rows (one per check) and cuts the lineage, so
+        # collecting it later neither re-plans the extraction branches
+        # nor re-parses the raw files after the release below
+        if report is not None:
+            result.quality_report = report.localCheckpoint(eager=True)
         # ADVICE r9: the sink path has materialized every table, so the
         # shared-parse cache has served its purpose — releasing it here
         # keeps callers unaware of PipelineResult.source from holding an
-        # input-sized cache until session end. Returned plans (including
-        # the lazy quality report) stay runnable; they recompute from the
-        # raw files. Callers that will re-force plans should use
-        # output_dir=None and call release() themselves.
+        # input-sized cache until session end. The returned table plans
+        # stay runnable; they recompute from the raw files. Callers that
+        # will re-force plans should use output_dir=None and call
+        # release() themselves.
         result.release()
     return result

@@ -3,16 +3,17 @@ reference's ``DataQualityChecker.run_quality_checks``
 (data_quality_checker.py:105-163), preserving its table names, error-type
 labels, and report shape ``(table_name, error_type, n_violations, pct)``.
 
-Execution shape: all format + logical-date checks for a table fold into ONE
-aggregate pass (``quality_report``); each duplicate check needs its own
-groupBy (a shuffle) and is unioned in as an extra report row. The reference
-instead loops Python per check per row — at 100 TB this suite is
-6 scans + 5 small shuffles total, all results dimension-sized.
+Execution shape: each table's suite reads its input ONCE
+(``quality_report``). Tables without a duplicate check fold every format
+and logical-date check into one aggregate; tables with one group by the
+duplicate keys once, carrying the check sums as partial aggregates, and a
+global aggregate over the groups gives every report row. The reference
+instead loops Python per check per row — at 100 TB this suite is one pass
+per table (six scans, four of them with one small shuffle), all results
+dimension-sized.
 """
 
 from __future__ import annotations
-
-from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -40,45 +41,10 @@ def out_of_order(start: str, end: str) -> Column:
     return s.isNotNull() & e.isNotNull() & (s > e)
 
 
-def duplicate_check_row(
-    df: DataFrame, keys: Sequence[str], error_type: str, table_name: str
-) -> DataFrame:
-    """A4 keep=False duplicate counting as one report row: every member of
-    a duplicate group counts (data_quality_checker.py:97-102)."""
-    dup_rows = (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") > 1)
-        .agg(F.coalesce(F.sum("cnt"), F.lit(0)).cast("bigint").alias("n"))
-    )
-    total = df.agg(F.count(F.lit(1)).alias("t"))
-    return dup_rows.crossJoin(total).select(
-        F.lit(table_name).alias("table_name"),
-        F.lit(error_type).alias("error_type"),
-        F.col("n").alias("n_violations"),
-        F.when(F.col("t") > 0, F.lit(100.0) * F.col("n") / F.col("t"))
-        .otherwise(F.lit(0.0))
-        .alias("pct"),
-    )
-
-
-def _suite(
-    df: DataFrame,
-    name: str,
-    checks: dict[str, Column],
-    dup_checks: Sequence[tuple[Sequence[str], str]] = (),
-) -> DataFrame:
-    report = quality_report(df, checks, table_name=name)
-    for keys, label in dup_checks:
-        report = report.unionByName(duplicate_check_row(df, list(keys), label, name))
-    return report
-
-
 def condition_checks(df: DataFrame) -> DataFrame:
     """data_quality_checker.py:111-117."""
-    return _suite(
+    return quality_report(
         df,
-        "condition_df",
         {
             "Invalid OnsetDateTime Format": invalid(
                 "resource_onsetDateTime", is_valid_datetime(F.col("resource_onsetDateTime"))
@@ -91,15 +57,15 @@ def condition_checks(df: DataFrame) -> DataFrame:
                 "resource_onsetDateTime", "resource_abatementDateTime"
             ),
         },
-        dup_checks=[(("fullUrl", "resource_id"), "Duplicate Check")],
+        table_name="condition_df",
+        duplicate=(("fullUrl", "resource_id"), "Duplicate Check"),
     )
 
 
 def encounter_checks(df: DataFrame) -> DataFrame:
     """data_quality_checker.py:120-125."""
-    return _suite(
+    return quality_report(
         df,
-        "encounter_df",
         {
             "Invalid Period Start Format": invalid(
                 "resource_period_start", is_valid_datetime(F.col("resource_period_start"))
@@ -108,16 +74,16 @@ def encounter_checks(df: DataFrame) -> DataFrame:
                 "resource_period_end", is_valid_datetime(F.col("resource_period_end"))
             ),
         },
-        dup_checks=[(("resource_id",), "Duplicate Resource.ID")],
+        table_name="encounter_df",
+        duplicate=(("resource_id",), "Duplicate Resource.ID"),
     )
 
 
 def careplan_checks(df: DataFrame) -> DataFrame:
     """data_quality_checker.py:128-133 — careplan periods validate as plain
     DATEs, not datetimes."""
-    return _suite(
+    return quality_report(
         df,
-        "careplan_df",
         {
             "Invalid Period Start Format": invalid(
                 "resource_period_start", is_valid_date(F.col("resource_period_start"))
@@ -129,14 +95,14 @@ def careplan_checks(df: DataFrame) -> DataFrame:
                 "resource_period_start", "resource_period_end"
             ),
         },
+        table_name="careplan_df",
     )
 
 
 def patient_checks(df: DataFrame) -> DataFrame:
     """data_quality_checker.py:136-145."""
-    return _suite(
+    return quality_report(
         df,
-        "patient_df",
         {
             "BirthDate Errors": invalid(
                 "resource_birthDate", is_valid_date(F.col("resource_birthDate"))
@@ -156,35 +122,36 @@ def patient_checks(df: DataFrame) -> DataFrame:
                 "resource_birthDate", "resource_deceasedDateTime"
             ),
         },
-        dup_checks=[(("resource_id",), "Duplicate Resource.ID")],
+        table_name="patient_df",
+        duplicate=(("resource_id",), "Duplicate Resource.ID"),
     )
 
 
 def observation_checks(df: DataFrame) -> DataFrame:
     """data_quality_checker.py:148-152."""
-    return _suite(
+    return quality_report(
         df,
-        "observation_df",
         {
             "Invalid EffectiveDateTime Format": invalid(
                 "resource_effectiveDateTime",
                 is_valid_datetime(F.col("resource_effectiveDateTime")),
             ),
         },
-        dup_checks=[(("resource_id",), "Duplicate Resource.ID")],
+        table_name="observation_df",
+        duplicate=(("resource_id",), "Duplicate Resource.ID"),
     )
 
 
 def immunization_checks(df: DataFrame) -> DataFrame:
     """data_quality_checker.py:155-158."""
-    return _suite(
+    return quality_report(
         df,
-        "immunization_df",
         {
             "Invalid Resource.Date Format": invalid(
                 "resource_date", is_valid_datetime(F.col("resource_date"))
             ),
         },
+        table_name="immunization_df",
     )
 
 

@@ -1,10 +1,10 @@
 """Data-quality profiling operators.
 
 Engine form of the reference's DataQualityChecker
-(data_quality_checker.py:5-163): every per-table report is ONE aggregate
-pass (the reference loops per column / per check in Python), returning a
-small report DataFrame. At 100 TB this is the difference between one scan
-and dozens.
+(data_quality_checker.py:5-163): every per-table report is ONE pass over
+its input (the reference loops per column / per check in Python),
+returning a small report DataFrame. At 100 TB this is the difference
+between one scan and dozens.
 """
 
 from __future__ import annotations
@@ -48,17 +48,41 @@ def missing_value_profile(df: DataFrame, columns: Sequence[str] | None = None) -
 
 
 def quality_report(
-    df: DataFrame, checks: dict[str, Column], table_name: str = "table"
+    df: DataFrame,
+    checks: dict[str, Column],
+    table_name: str = "table",
+    duplicate: tuple[Sequence[str], str] | None = None,
 ) -> DataFrame:
     """Run a suite of named violation predicates in one pass (A2/A5,
     data_quality_checker.py:34-45,105-163). ``checks`` maps error-type name →
     boolean Column that is true for violating rows. Returns the reference's
-    report shape: (table_name, error_type, n_violations, pct)."""
+    report shape: (table_name, error_type, n_violations, pct).
+
+    ``duplicate=(keys, label)`` adds the A4 keep=False duplicate count as
+    the last report row: every member of a group of rows sharing ``keys``
+    (nulls group together) counts once the group has more than one row
+    (data_quality_checker.py:97-102). It stays one pass over ``df``: the
+    rows are grouped by ``keys`` once, carrying a row count and the
+    per-check violation sums as the partial aggregates, and one global
+    aggregate over the groups yields the total, every check and the
+    duplicate count (Σ group size over groups larger than one). The
+    shuffle carries one partial row per distinct key per map partition.
+    On an empty ``df`` the checks read null and the duplicate count 0,
+    each with ``pct`` 0.0."""
     names = list(checks)
-    wide = df.agg(
-        F.count(F.lit(1)).alias("__total"),
-        *[_violations(cond).alias(f"__c{i}") for i, cond in enumerate(checks.values())],
-    )
+    sums = [_violations(cond).alias(f"__c{i}") for i, cond in enumerate(checks.values())]
+    if duplicate is None:
+        wide = df.agg(F.count(F.lit(1)).alias("__total"), *sums)
+    else:
+        keys, label = duplicate
+        groups = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("__cnt"), *sums)
+        wide = groups.agg(
+            F.sum("__cnt").alias("__total"),
+            *[F.sum(f"__c{i}").alias(f"__c{i}") for i in range(len(names))],
+            F.coalesce(F.sum(F.when(F.col("__cnt") > 1, F.col("__cnt"))), F.lit(0))
+            .alias(f"__c{len(names)}"),
+        )
+        names.append(label)
     stack_args = ", ".join(f"'{name}', `__c{i}`" for i, name in enumerate(names))
     return wide.select(
         F.col("__total"),

@@ -1032,18 +1032,17 @@ def union_by_name_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_quality_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Config-driven quality-check suite parity (A5,
-    data_quality_checker.py:105-163) on the events table: all format (A2)
-    and logical-order (A3) checks fold into ONE aggregate pass via
-    quality_report; the keep=False duplicate check (A4) unions in as an
-    extra report row — same report shape as the reference
-    (table, error_type, count, pct). The Invalid Measurement and
-    Missing Timestamp classes surface exactly the rows the events-domain
-    contract (functions/measurement.py) excludes from the temporal
-    operators — counted here, not silently dropped, per the reference's
-    violations-are-reported philosophy (data_quality_checker.py:34-45);
+    data_quality_checker.py:105-163) on the events table: the format (A2),
+    logical-order (A3) and keep=False duplicate (A4) checks all come from
+    ONE pass of quality_report — one groupBy on the duplicate keys whose
+    partial aggregates carry the check sums, then one global aggregate —
+    same report shape as the reference (table, error_type, count, pct).
+    The Invalid Measurement and Missing Timestamp classes surface exactly
+    the rows the events-domain contract (functions/measurement.py)
+    excludes from the temporal operators — counted here, not silently
+    dropped, per the reference's violations-are-reported philosophy (data_quality_checker.py:34-45);
     the range/order checks are scoped to VALID measurements so NaN's
     engine-specific comparison semantics never reach a predicate."""
-    from ehr_data_pipeline_spark.fhir.quality import duplicate_check_row
     from ehr_data_pipeline_spark.functions.measurement import (
         is_invalid_measurement,
         valid_measurement,
@@ -1061,9 +1060,9 @@ def events_quality_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Value Out Of Range": vm.isNotNull() & ((vm < 0) | (vm > 400)),
         "Logical Value Order": vm.isNotNull() & k.isNotNull() & (vm > k),
     }
-    report = quality_report(e, checks, table_name="events")
-    return report.unionByName(
-        duplicate_check_row(e, ["user_id", "event_type"], "Duplicate User/Type", "events")
+    return quality_report(
+        e, checks, table_name="events",
+        duplicate=(("user_id", "event_type"), "Duplicate User/Type"),
     )
 
 

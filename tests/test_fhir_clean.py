@@ -154,3 +154,96 @@ def test_full_pipeline_end_to_end(spark, clean_tables):
         r["resource_patient_reference"] for r in clean_tables["Encounter"].collect()
     }
     assert enc_refs <= patients
+
+
+def _old_two_pass_report(df, checks, table_name="table", duplicate=None):
+    """The pre-one-pass suite expression, kept verbatim as the pin: the
+    single check aggregate unioned with a separate duplicate branch — a
+    groupBy count filtered to groups > 1, crossJoined with a second
+    total-count scan."""
+    from pyspark.sql import functions as F
+
+    from ehr_data_pipeline_spark.operators.quality import quality_report
+
+    report = quality_report(df, checks, table_name=table_name)
+    if duplicate is None:
+        return report
+    keys, error_type = duplicate
+    dup_rows = (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .filter(F.col("cnt") > 1)
+        .agg(F.coalesce(F.sum("cnt"), F.lit(0)).cast("bigint").alias("n"))
+    )
+    total = df.agg(F.count(F.lit(1)).alias("t"))
+    return report.unionByName(
+        dup_rows.crossJoin(total).select(
+            F.lit(table_name).alias("table_name"),
+            F.lit(error_type).alias("error_type"),
+            F.col("n").alias("n_violations"),
+            F.when(F.col("t") > 0, F.lit(100.0) * F.col("n") / F.col("t"))
+            .otherwise(F.lit(0.0))
+            .alias("pct"),
+        )
+    )
+
+
+def _report_rows(df):
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema.fields] == [
+        ("table_name", "string"), ("error_type", "string"),
+        ("n_violations", "bigint"), ("pct", "double"),
+    ]
+    return [tuple(r) for r in df.collect()]
+
+
+def _fhir_report_both_ways(tables, monkeypatch):
+    import ehr_data_pipeline_spark.fhir.quality as fq
+
+    new = _report_rows(fhir_quality_report(tables))
+    with monkeypatch.context() as m:
+        m.setattr(fq, "quality_report", _old_two_pass_report)
+        old = _report_rows(fhir_quality_report(tables))
+    return new, old
+
+
+def test_one_pass_suite_matches_two_pass_on_fixtures(raw_tables, monkeypatch):
+    """Equivalence pin: every suite's one-pass report equals the old
+    two-pass expression row for row (order, values and exact pct)."""
+    new, old = _fhir_report_both_ways(raw_tables, monkeypatch)
+    assert new == old
+    rows = {(t, e): (n, p) for t, e, n, p in new}
+    assert rows[("patient_df", "Duplicate Resource.ID")][0] == 2  # p9 group
+    assert rows[("observation_df", "Duplicate Resource.ID")][0] == 2
+
+
+def test_one_pass_suite_matches_two_pass_on_empty_tables(raw_tables, monkeypatch):
+    """Empty inputs: format checks stay null (SUM over no rows), duplicate
+    checks stay 0, every pct is 0.0 — as the two-pass form gave."""
+    empty = {rt: df.limit(0) for rt, df in raw_tables.items()}
+    new, old = _fhir_report_both_ways(empty, monkeypatch)
+    assert new == old
+    assert len(new) == 20
+    for _, error_type, n, pct in new:
+        assert n == (0 if "Duplicate" in error_type else None), error_type
+        assert pct == 0.0
+
+
+def test_one_pass_duplicate_check_groups_null_keys(spark):
+    """Null duplicate keys group together (groupBy semantics), in both
+    forms: (None, None)×2 + ('a', None)×2 + ('b', 2)×3 are duplicates,
+    the singleton groups are not."""
+    from pyspark.sql import functions as F
+
+    from ehr_data_pipeline_spark.operators.quality import quality_report
+
+    keys = [(None, None)] * 2 + [(None, 1), ("a", 1)] + [("a", None)] * 2 + [("b", 2)] * 3
+    df = spark.createDataFrame(
+        [(k1, k2, i) for i, (k1, k2) in enumerate(keys)],
+        "k1 string, k2 int, v int",
+    )
+    checks = {"Odd V": F.col("v") % 2 == 1, "Null K2": F.col("k2").isNull()}
+    dup = (("k1", "k2"), "Duplicate K")
+    new = _report_rows(quality_report(df, checks, table_name="t", duplicate=dup))
+    old = _report_rows(_old_two_pass_report(df, checks, table_name="t", duplicate=dup))
+    assert new == old
+    assert new[-1] == ("t", "Duplicate K", 7, 100.0 * 7 / 9)

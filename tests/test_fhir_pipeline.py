@@ -212,3 +212,26 @@ def test_input_size_bytes_rejects_unknown_size_sentinel(spark, tmp_path):
     path = str(tmp_path / "scan")
     rdd_rooted.write.parquet(path)
     assert 0 < _input_size_bytes(spark.read.parquet(path)) < 2**63 - 1
+
+
+def test_sink_path_returns_materialised_quality_report(spark, tmp_path):
+    """On the sink path the report is forced over the live single-parse
+    cache before release and handed back materialised: collecting it
+    scans neither the JSON files nor a cache, and it equals the lazy
+    report over the same directory."""
+    from ehr_data_pipeline_spark.fhir.extract import extract_all
+    from ehr_data_pipeline_spark.fhir.ingest import read_and_route
+    from ehr_data_pipeline_spark.fhir.quality import fhir_quality_report
+
+    result = run_pipeline(
+        spark, FIXTURE_DIR, output_dir=str(tmp_path / "out"), quality=True
+    )
+    assert result.source is None
+    plan = result.quality_report._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan" not in plan and "Scan json" not in plan, plan
+    assert "InMemoryTableScan" not in plan, plan
+    lazy = fhir_quality_report(extract_all(read_and_route(spark, FIXTURE_DIR)))
+    key = lambda t: tuple((x is None, str(x)) for x in t)  # noqa: E731
+    got = sorted(map(tuple, result.quality_report.collect()), key=key)
+    assert got == sorted(map(tuple, lazy.collect()), key=key)
+    assert len(got) == 20

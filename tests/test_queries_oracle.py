@@ -26,15 +26,26 @@ def con(sf_dir):
     con.close()
 
 
+def _selected_names(request, test_name: str) -> list[str]:
+    """The ``name`` parameters of the ``test_name`` items this session
+    will run, so a ``-k`` selection prefetches only the queries it
+    compares; a full run selects every name."""
+    return [
+        item.callspec.params["name"]
+        for item in request.session.items
+        if getattr(item, "originalname", None) == test_name
+    ]
+
+
 @pytest.fixture(scope="module")
-def oracle_results(spark, sf_dir):
-    # the full-registry replay runs CONCURRENTLY once per module (guide
-    # §2.6 — these are ~150 independent latency-bound jobs that pytest
-    # would otherwise serialize; the r15 fix for the driver's killed
-    # suite run, VERDICT r14 #2); each test below compares its own
-    # prefetched frame, so per-query reporting is unchanged
+def oracle_results(request, spark, sf_dir):
+    # the selected registry replays run CONCURRENTLY once per module
+    # (up to ~150 independent latency-bound jobs that pytest would
+    # otherwise serialize, VERDICT r14 #2); each test below compares its
+    # own prefetched frame, so per-query reporting is unchanged
     return prefetch_spark_pdfs(
-        {n: (lambda n=n: REGISTRY[n].fn(spark, sf_dir)) for n in ORACLE_NAMES}
+        {n: (lambda n=n: REGISTRY[n].fn(spark, sf_dir))
+         for n in _selected_names(request, "test_query_matches_oracle")}
     )
 
 
@@ -68,10 +79,10 @@ def test_oracle_types_no_hugeint(con, name):
 
 
 @pytest.fixture(scope="module")
-def rows_only_results(spark, sf_dir):
+def rows_only_results(request, spark, sf_dir):
     return prefetch_spark_pdfs(
         {n: (lambda n=n: REGISTRY[n].fn(spark, sf_dir))
-         for n in ROWS_ONLY_NAMES}
+         for n in _selected_names(request, "test_rows_only_query_runs")}
     )
 
 
